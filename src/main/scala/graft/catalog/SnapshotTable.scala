@@ -196,37 +196,15 @@ object SnapshotTable {
   private[catalog] def fsFor(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Manifest-layer cost counters (dev instrumentation — tools/ProfileFold
-    * reads and resets them to attribute a fold's driver-side wall time;
-    * always-on because the nanoTime bracket costs ~ns against filesystem
-    * calls). Never read by library code paths.
-    */
-  private[graft] object ManifestMetrics {
-    val listings = new java.util.concurrent.atomic.LongAdder
-    val listingNanos = new java.util.concurrent.atomic.LongAdder
-    val parses = new java.util.concurrent.atomic.LongAdder
-    val parseNanos = new java.util.concurrent.atomic.LongAdder
-    val publishes = new java.util.concurrent.atomic.LongAdder
-    val publishNanos = new java.util.concurrent.atomic.LongAdder
-    def reset(): Unit =
-      Seq(listings, listingNanos, parses, parseNanos, publishes, publishNanos)
-        .foreach(_.reset())
-  }
-
   private[catalog] def manifestVersions(fs: FileSystem, dir: String): Seq[(Long, Path)] = {
-    val t0 = System.nanoTime()
     val log = new Path(dir, LogDirName)
-    val out =
-      if (!fs.exists(log)) Seq.empty[(Long, Path)]
-      else fs.listStatus(log).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case ManifestRe(v) => Some((v.toLong, st.getPath))
-          case _ => None
-        }
-      }.sortBy(_._1)
-    ManifestMetrics.listings.increment()
-    ManifestMetrics.listingNanos.add(System.nanoTime() - t0)
-    out
+    if (!fs.exists(log)) Seq.empty[(Long, Path)]
+    else fs.listStatus(log).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case ManifestRe(v) => Some((v.toLong, st.getPath))
+        case _ => None
+      }
+    }.sortBy(_._1)
   }
 
   /** True iff the directory has at least one committed snapshot. */
@@ -251,9 +229,8 @@ object SnapshotTable {
   }
 
   private[catalog] def readManifest(fs: FileSystem, p: Path): Manifest = {
-    val t0 = System.nanoTime()
     val raw = parseManifest(fs, p)
-    val out = raw.segments match {
+    raw.segments match {
       case None => raw
       case Some(names) =>
         // resolve: segment entries (listed order) precede the inline tail;
@@ -261,9 +238,6 @@ object SnapshotTable {
         val log = p.getParent
         raw.copy(entries = names.flatMap(n => loadSegment(fs, new Path(log, n))) ++ raw.entries)
     }
-    ManifestMetrics.parses.increment()
-    ManifestMetrics.parseNanos.add(System.nanoTime() - t0)
-    out
   }
 
   /** Segment files are immutable once referenced, so their parsed entries
@@ -3071,15 +3045,6 @@ object SnapshotTable {
     * reader sees the full file or no file.
     */
   private def tryPublish(fs: FileSystem, dir: String, manifest: Manifest): Boolean = {
-    val t0 = System.nanoTime()
-    try tryPublishTimed(fs, dir, manifest)
-    finally {
-      ManifestMetrics.publishes.increment()
-      ManifestMetrics.publishNanos.add(System.nanoTime() - t0)
-    }
-  }
-
-  private def tryPublishTimed(fs: FileSystem, dir: String, manifest: Manifest): Boolean = {
     val log = new Path(dir, LogDirName)
     val tmp = new Path(log, s"manifest-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
     val out = fs.create(tmp, false)

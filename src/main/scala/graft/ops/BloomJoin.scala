@@ -35,11 +35,14 @@ object BloomJoin {
     *
     * @param expectedKeys sizing for the bloom: `Some(n)` when the caller
     *                     knows the distinct-key scale; `None` (default)
-    *                     COUNTS the key side first — one extra small-side
-    *                     job, and the filter is sized to the data instead
-    *                     of a constant that under-sizes (FPR → 1, filter
-    *                     neutered) or over-sizes (megabytes of literal in
-    *                     every task) the moment the population moves
+    *                     COUNTS the key side's ROWS first — one extra
+    *                     small-side job, and the filter is sized to the
+    *                     data instead of a constant that under-sizes (FPR
+    *                     → 1, filter neutered) the moment the population
+    *                     moves. The row count is an upper bound on the
+    *                     distinct keys: a key side with duplicates gets a
+    *                     filter sized for more keys than it holds (a lower
+    *                     FPR than `fpp`, at more literal bytes per task)
     * @param fpp          target false-positive rate: the pre-filter passes
     *                     ~fpp of non-matching fact rows to the exact join
     */

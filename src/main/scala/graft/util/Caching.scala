@@ -19,24 +19,12 @@ object Caching {
     * themselves are reclaimed by the ContextCleaner once the returned frame
     * is unreferenced. On a real cluster (where executor loss would kill
     * local checkpoint blocks), swap in reliable `checkpoint()` or a table
-    * write — same contract.
+    * write — same contract. The returned frame's own plan is a bare
+    * checkpoint scan; `graft.Explain` prints the plan that ran here.
     */
-  /** Dev-only plan capture: operators that end in [[materialize]] hide their
-    * real physical plan behind the checkpoint scan, so `graft.Explain` on the
-    * returned frame shows a bare `Scan ExistingRDD`. With
-    * SPARK_GRAFT_EXPLAIN_MATERIALIZE=1 the pre-checkpoint plan prints here
-    * (formatted) before materialization — the r21 plan-evidence hook. Off by
-    * default; the flag is read once so the timed path pays one cached
-    * boolean test.
-    */
-  private val explainMaterialize: Boolean =
-    sys.env.get("SPARK_GRAFT_EXPLAIN_MATERIALIZE").contains("1")
-
   def materialize(result: DataFrame, cached: DataFrame*): DataFrame =
-    try {
-      if (explainMaterialize) result.explain("formatted")
-      result.localCheckpoint(eager = true)
-    } finally cached.foreach(_.unpersist(blocking = false))
+    try result.localCheckpoint(eager = true)
+    finally cached.foreach(_.unpersist(blocking = false))
 
   /** localCheckpoint a frame AND capture the id of the RDD it pinned, so an
     * iterative operator can release a superseded round's blocks explicitly.

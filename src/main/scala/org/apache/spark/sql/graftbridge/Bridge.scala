@@ -10,9 +10,29 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * `SparkSessionExtensions`, but plan construction itself has no public
   * equivalent, so this shim lives in an `org.apache.spark.sql` subpackage
   * (the standard pattern across Spark connector/extension libraries).
-  * Nothing else in the engine reaches into Spark internals this way.
+  * Nothing else in the engine reaches into Spark internals this way; the
+  * listener-bus drain below rides the same doorway.
   */
 object Bridge {
+
+  /** Upper bound on [[drainListenerBus]]: the bus delivers a query's whole
+    * event backlog in milliseconds, so a minute means a wedged listener.
+    */
+  private val DrainTimeoutMillis = 60000L
+
+  /** Block until every event already posted to the listener bus has been
+    * delivered to every listener (SparkListeners and, through the bus, the
+    * session's QueryExecutionListeners). Exact where polling a counter
+    * until it stops moving is a guess; fails loudly past the bound.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    try sc.listenerBus.waitUntilEmpty(DrainTimeoutMillis)
+    catch {
+      case e: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"listener bus not drained within $DrainTimeoutMillis ms", e)
+    }
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

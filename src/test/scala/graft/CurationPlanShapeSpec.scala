@@ -40,26 +40,18 @@ class CurationPlanShapeSpec extends SparkSpec {
     */
   private def executedNodesDuring(run: => Unit): Seq[String] = {
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
         allNodes(qe.executedPlan).foreach(p => buf.add(p.nodeName))
-        counter.incrementAndGet(); ()
-      }
       override def onFailure(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
     try {
       run
-      // the listener bus is async — wait for quiet
-      var last = -1; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val n = counter.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
+      // the listener bus is async — deliver every queued event before reading
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     buf.asScala.toSeq

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.ops.Graph
 
@@ -163,5 +165,33 @@ class GraphSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(driver == distributed, s"auto paths diverged on trial $trial (n=$n)")
     }
+  }
+
+  test("q134 plan shape: triangleCount's closing (t1, t2) join broadcasts on the sf0.1 edges") {
+    // Graph.triangleCount keeps its wedge stream un-exchanged only while the
+    // closing side broadcasts (the note above its closing join); when this
+    // stops holding, the documented wedge pre-aggregation is due a retry.
+    // The operator materializes internally, so its real plan is only
+    // visible through the execution listener.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val sf01 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.1").toString
+      SparkEntry.queries("q134_triangles")(spark, sf01)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    val closing = plans.asScala.toSeq.flatMap(p => collectAll(p) {
+      case j: BaseJoinExec if j.leftKeys.length == 2 => j.nodeName
+    })
+    assert(closing.nonEmpty, "no two-key (t1, t2) join in the executed plans")
+    assert(closing.forall(_ == "BroadcastHashJoin"), closing.mkString(", "))
   }
 }

@@ -77,14 +77,8 @@ class SkewSpec extends SparkSpec {
       spark.sparkContext.addSparkListener(listener)
       try {
         run()
-        // listener events are async: poll until the buffer goes quiet
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(200)
-          val now = recs.synchronized(recs.size)
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
+        // listener events are async: deliver every queued one before reading
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       } finally spark.sparkContext.removeSparkListener(listener)
       // the join's reduce stage is the stage with the largest shuffle-read total
       val byStage = recs.synchronized(recs.toSeq).groupBy(_._1).view.mapValues(_.map(_._2)).toMap

@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.similarity.Similarity
+import graft.util.RunMetrics
+import graft.util.RunMetrics.Sample
 
 /** Empirical scaling evidence for the heavy pipelines: run each at 1× and
   * 4× input and require near-linear growth in time and shuffle volume with
   * ZERO disk spill — the measured counterpart of the "would this survive
-  * 100×?" plan arguments. Metrics come from a SparkListener (per-task
-  * shuffle write bytes, spill, peak execution memory), not wall-clock
-  * guesswork alone.
+  * 100×?" plan arguments. Metrics come from `graft.util.RunMetrics`
+  * (per-task shuffle write bytes, spill, peak execution memory), not
+  * wall-clock guesswork alone.
   *
   * Env-gated (slow): runs only with SPARK_GRAFT_SOAK=1, e.g.
   * `SPARK_GRAFT_SOAK=1 sbt 'testOnly graft.ScaleSoakSpec'`. Time bounds are
@@ -25,72 +27,47 @@ class ScaleSoakSpec extends SparkSpec {
   private val sf01 = "/root/testdata/sf0.1"
   private lazy val soakRoot = java.nio.file.Files.createTempDirectory("graft-soak").toString
 
-  private case class RunMetrics(sec: Double, shuffleWriteBytes: Long,
-      diskSpill: Long, memSpill: Long, peakMem: Long) {
+  private implicit class Pretty(m: Sample) {
     def pretty: String =
-      f"$sec%.2fs shuffleW=${shuffleWriteBytes / 1e6}%.1fMB diskSpill=$diskSpill%d " +
-        f"memSpill=${memSpill / 1e6}%.1fMB peakTaskMem=${peakMem / 1e6}%.1fMB"
+      f"${m.wallSec}%.2fs shuffleW=${m.shuffleWriteBytes / 1e6}%.1fMB diskSpill=${m.diskSpillBytes}%d " +
+        f"memSpill=${m.memSpillBytes / 1e6}%.1fMB peakTaskMem=${m.peakExecMemBytes / 1e6}%.1fMB"
   }
+
+  /** The SOAK.json fields of one sample, named (never positional). */
+  private def named(m: Sample) = Map[String, Any]("sec" -> m.wallSec,
+    "shuffle_write_bytes" -> m.shuffleWriteBytes, "disk_spill_bytes" -> m.diskSpillBytes,
+    "mem_spill_bytes" -> m.memSpillBytes, "peak_task_mem_bytes" -> m.peakExecMemBytes)
 
   /** Run the action twice, collecting task metrics; keep the faster rep
     * (robust to one co-tenant hiccup — both reps being inflated is rarer).
     */
-  private def measure(run: () => Unit): RunMetrics =
-    Seq(measureOnce(run), measureOnce(run)).minBy(_.sec)
+  private def measure(run: () => Unit): Sample =
+    Seq(measureOnce(run), measureOnce(run)).minBy(_.wallSec)
 
   /** One measured run — for actions that are NOT repeatable (a delete is
     * a no-op the second time); repeatable actions go through [[measure]].
     */
-  private def measureOnce(run: () => Unit): RunMetrics = {
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      (0L, 0L, 0L, 0L, 0)) // (shufW, disk, mem, peak, events)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) acc.updateAndGet { case (w, d, m, p, n) =>
-          (w + t.taskMetrics.shuffleWriteMetrics.bytesWritten,
-            d + t.taskMetrics.diskBytesSpilled,
-            m + t.taskMetrics.memoryBytesSpilled,
-            math.max(p, t.taskMetrics.peakExecutionMemory), n + 1)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    try {
-      run()
-      // listener bus is async — wait for quiet
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(150)
-        val n = acc.get()._5
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val sec = (System.nanoTime() - t0) / 1e9
-    val (w, d, m, p, _) = acc.get()
+  private def measureOnce(run: () => Unit): Sample = {
+    val m = RunMetrics.measure(spark)(run())
     spark.catalog.clearCache()
     SparkEntry.clearMemos()
-    RunMetrics(sec, w, d, m, p)
+    m
   }
 
-  private def assertScaling(name: String, m1: RunMetrics, m4: RunMetrics,
+  private def assertScaling(name: String, m1: Sample, m4: Sample,
       extra: Map[String, Long] = Map.empty): Unit = {
     info(s"$name 1x: ${m1.pretty}")
     info(s"$name 4x: ${m4.pretty}")
-    def named(m: RunMetrics) = Map[String, Any]("sec" -> m.sec,
-      "shuffle_write_bytes" -> m.shuffleWriteBytes, "disk_spill_bytes" -> m.diskSpill,
-      "mem_spill_bytes" -> m.memSpill, "peak_task_mem_bytes" -> m.peakMem)
     SoakReport.record(name, named(m1), named(m4), extra)
-    assert(m4.diskSpill == 0L, s"$name spilled ${m4.diskSpill} bytes to disk at 4x")
-    assert(m4.sec <= 6.0 * math.max(m1.sec, 0.5),
-      f"$name time superlinear: 1x ${m1.sec}%.2fs -> 4x ${m4.sec}%.2fs")
+    assert(m4.diskSpillBytes == 0L, s"$name spilled ${m4.diskSpillBytes} bytes to disk at 4x")
+    assert(m4.wallSec <= 6.0 * math.max(m1.wallSec, 0.5),
+      f"$name time superlinear: 1x ${m1.wallSec}%.2fs -> 4x ${m4.wallSec}%.2fs")
     assert(m4.shuffleWriteBytes <= 6L * math.max(m1.shuffleWriteBytes, 1L << 20),
       s"$name shuffle superlinear: ${m1.shuffleWriteBytes} -> ${m4.shuffleWriteBytes}")
   }
 
   /** Capture a named `observe` metric (first long of its row) from the
-    * queries `run` executes. The ExecutionListenerBus is async — poll until
-    * the metric lands (or time out loudly).
+    * queries `run` executes, delivered through the async listener bus.
     */
   private def observedMetric(name: String)(run: () => Unit): Long = {
     val got = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
@@ -104,8 +81,7 @@ class ScaleSoakSpec extends SparkSpec {
     spark.listenerManager.register(l)
     try {
       run()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (got.get() == Long.MinValue && System.nanoTime() < deadline) Thread.sleep(100)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     assert(got.get() != Long.MinValue, s"observed metric '$name' never arrived")
     got.get()
@@ -336,8 +312,8 @@ class ScaleSoakSpec extends SparkSpec {
     // the FLATNESS assertions — stronger than assertScaling's linearity
     // bound: 4x the table, same rewrite slice, so cost must not follow
     // the table (generous 2x headroom for version-listing overhead)
-    assert(m4.sec <= 2.0 * math.max(m1.sec, 0.5),
-      f"change-feed time follows the TABLE, not the rewrite: ${m1.sec}%.2fs -> ${m4.sec}%.2fs")
+    assert(m4.wallSec <= 2.0 * math.max(m1.wallSec, 0.5),
+      f"change-feed time follows the TABLE, not the rewrite: ${m1.wallSec}%.2fs -> ${m4.wallSec}%.2fs")
     assert(m4.shuffleWriteBytes <= 2L * math.max(m1.shuffleWriteBytes, 1L << 20),
       s"change-feed shuffle follows the TABLE, not the rewrite: " +
         s"${m1.shuffleWriteBytes} -> ${m4.shuffleWriteBytes}")
@@ -560,7 +536,7 @@ class ScaleSoakSpec extends SparkSpec {
     // factor-scaled size into an identity-partitioned table; measure()
     // replays it, so the table sees 2 runs of continuous ingest before
     // the layout assertions — the sustained part of the claim
-    def ingest(factor: Int): (String, RunMetrics) = {
+    def ingest(factor: Int): (String, Sample) = {
       val dir = s"$soakRoot/routed/t_x$factor"
       SnapshotTable.write(spark,
         spark.range(0, 0).select((col("id") % 8).as("k"), col("id").as("v")),
@@ -641,21 +617,14 @@ class ScaleSoakSpec extends SparkSpec {
     // positions are already hidden); one timed run per scale instead
     val m1 = measureOnce(() => del(d1))
     val m4 = measureOnce(() => del(d4))
-    SoakReport.record("mor_delete",
-      Map("sec" -> m1.sec, "shuffle_write_bytes" -> m1.shuffleWriteBytes,
-        "disk_spill_bytes" -> m1.diskSpill, "mem_spill_bytes" -> m1.memSpill,
-        "peak_task_mem_bytes" -> m1.peakMem),
-      Map("sec" -> m4.sec, "shuffle_write_bytes" -> m4.shuffleWriteBytes,
-        "disk_spill_bytes" -> m4.diskSpill, "mem_spill_bytes" -> m4.memSpill,
-        "peak_task_mem_bytes" -> m4.peakMem),
-      Map.empty)
+    SoakReport.record("mor_delete", named(m1), named(m4), Map.empty)
     info(s"mor_delete 1x: ${m1.pretty}")
     info(s"mor_delete 4x: ${m4.pretty}")
-    assert(m4.diskSpill == 0L, s"mor delete spilled ${m4.diskSpill} bytes at 4x")
+    assert(m4.diskSpillBytes == 0L, s"mor delete spilled ${m4.diskSpillBytes} bytes at 4x")
     // flatness with generous co-tenant headroom: same matched slice, 4x
     // table — candidate pruning keeps the scan near the matched files
-    assert(m4.sec <= 3.0 * math.max(m1.sec, 0.5),
-      f"MoR delete follows the TABLE, not the match: ${m1.sec}%.2fs -> ${m4.sec}%.2fs")
+    assert(m4.wallSec <= 3.0 * math.max(m1.wallSec, 0.5),
+      f"MoR delete follows the TABLE, not the match: ${m1.wallSec}%.2fs -> ${m4.wallSec}%.2fs")
   }
 
   test("soak: streaming dedup probe ingest stays flat as resident state scales") {
@@ -669,7 +638,7 @@ class ScaleSoakSpec extends SparkSpec {
       val r = new scala.util.Random(seed)
       Seq.fill(25)("w" + r.nextInt(5000)).mkString(" ")
     }
-    def metricsFor(resident: Int): RunMetrics = {
+    def metricsFor(resident: Int): Sample = {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val mem = MemoryStream[(Long, String)]
       val q = graft.streaming.StreamingDedup
@@ -688,19 +657,13 @@ class ScaleSoakSpec extends SparkSpec {
     }
     val m1 = metricsFor(20000)
     val m4 = metricsFor(80000)
-    SoakReport.record("streaming_dedup",
-      Map("sec" -> m1.sec, "shuffle_write_bytes" -> m1.shuffleWriteBytes,
-        "disk_spill_bytes" -> m1.diskSpill, "mem_spill_bytes" -> m1.memSpill,
-        "peak_task_mem_bytes" -> m1.peakMem),
-      Map("sec" -> m4.sec, "shuffle_write_bytes" -> m4.shuffleWriteBytes,
-        "disk_spill_bytes" -> m4.diskSpill, "mem_spill_bytes" -> m4.memSpill,
-        "peak_task_mem_bytes" -> m4.peakMem),
+    SoakReport.record("streaming_dedup", named(m1), named(m4),
       Map("resident_x1" -> 20000L, "resident_x4" -> 80000L, "probe" -> 2000L))
     info(s"streaming_dedup 1x: ${m1.pretty}")
     info(s"streaming_dedup 4x: ${m4.pretty}")
-    assert(m4.diskSpill == 0L, s"probe ingest spilled ${m4.diskSpill} bytes at 4x state")
-    assert(m4.sec <= 2.5 * math.max(m1.sec, 0.5),
-      f"probe ingest follows CORPUS, not bucket occupancy: ${m1.sec}%.2fs -> ${m4.sec}%.2fs")
+    assert(m4.diskSpillBytes == 0L, s"probe ingest spilled ${m4.diskSpillBytes} bytes at 4x state")
+    assert(m4.wallSec <= 2.5 * math.max(m1.wallSec, 0.5),
+      f"probe ingest follows CORPUS, not bucket occupancy: ${m1.wallSec}%.2fs -> ${m4.wallSec}%.2fs")
   }
 
   test("soak: streaming SemDeDup probe ingest is cap-bounded as resident state scales") {
@@ -717,7 +680,7 @@ class ScaleSoakSpec extends SparkSpec {
       Seq.fill(dim)(r.nextGaussian())
     }
     val centroids: Seq[Seq[Double]] = (0 until 16).map(i => vec(900000L + i))
-    def metricsFor(resident: Int): RunMetrics = {
+    def metricsFor(resident: Int): Sample = {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val mem = MemoryStream[(Long, Seq[Double])]
       val q = graft.streaming.StreamingSemDeDup
@@ -737,20 +700,14 @@ class ScaleSoakSpec extends SparkSpec {
     }
     val m1 = metricsFor(20000)
     val m4 = metricsFor(80000)
-    SoakReport.record("streaming_semdedup",
-      Map("sec" -> m1.sec, "shuffle_write_bytes" -> m1.shuffleWriteBytes,
-        "disk_spill_bytes" -> m1.diskSpill, "mem_spill_bytes" -> m1.memSpill,
-        "peak_task_mem_bytes" -> m1.peakMem),
-      Map("sec" -> m4.sec, "shuffle_write_bytes" -> m4.shuffleWriteBytes,
-        "disk_spill_bytes" -> m4.diskSpill, "mem_spill_bytes" -> m4.memSpill,
-        "peak_task_mem_bytes" -> m4.peakMem),
+    SoakReport.record("streaming_semdedup", named(m1), named(m4),
       Map("resident_x1" -> 20000L, "resident_x4" -> 80000L, "probe" -> 1000L,
         "max_per_cell" -> 512L))
     info(s"streaming_semdedup 1x: ${m1.pretty}")
     info(s"streaming_semdedup 4x: ${m4.pretty}")
-    assert(m4.diskSpill == 0L, s"probe ingest spilled ${m4.diskSpill} bytes at 4x state")
-    assert(m4.sec <= 2.5 * math.max(m1.sec, 0.5),
-      f"probe ingest follows CORPUS, not the cell cap: ${m1.sec}%.2fs -> ${m4.sec}%.2fs")
+    assert(m4.diskSpillBytes == 0L, s"probe ingest spilled ${m4.diskSpillBytes} bytes at 4x state")
+    assert(m4.wallSec <= 2.5 * math.max(m1.wallSec, 0.5),
+      f"probe ingest follows CORPUS, not the cell cap: ${m1.wallSec}%.2fs -> ${m4.wallSec}%.2fs")
   }
 
   test("soak: incremental-clusters fold REWRITE stays flat as the assignment grows 4x") {
@@ -769,7 +726,7 @@ class ScaleSoakSpec extends SparkSpec {
         .select(col("id").as("doc_id"), col("id").as("rep_id")).repartition(2)
       if (i == 0) SnapshotTable.write(spark, df, dir) else SnapshotTable.append(spark, df, dir)
     }
-    def foldAndMeasure(dir: String, mor: Boolean = false): (RunMetrics, Long, Long) = {
+    def foldAndMeasure(dir: String, mor: Boolean = false): (Sample, Long, Long) = {
       val before = SnapshotTable.currentManifest(spark, dir).get.entries.map(_.path).toSet
       // 500 singleton merges confined to doc_ids [0, 2000) — one chunk's range
       val batch = (0L until 500L).map(i => (4 * i, 4 * i + 1)).toDF("id_a", "id_b")
@@ -793,20 +750,14 @@ class ScaleSoakSpec extends SparkSpec {
     val (_, morRows4, _) = foldAndMeasure(dm4, mor = true)
     assert(morRows1 == 500L && morRows4 == 500L,
       s"MoR fold should write exactly the 500 changed rows: $morRows1 / $morRows4")
-    SoakReport.record("incc_fold",
-      Map("sec" -> m1.sec, "shuffle_write_bytes" -> m1.shuffleWriteBytes,
-        "disk_spill_bytes" -> m1.diskSpill, "mem_spill_bytes" -> m1.memSpill,
-        "peak_task_mem_bytes" -> m1.peakMem),
-      Map("sec" -> m4.sec, "shuffle_write_bytes" -> m4.shuffleWriteBytes,
-        "disk_spill_bytes" -> m4.diskSpill, "mem_spill_bytes" -> m4.memSpill,
-        "peak_task_mem_bytes" -> m4.peakMem),
+    SoakReport.record("incc_fold", named(m1), named(m4),
       Map("table_rows_x1" -> 16 * chunkRows, "table_rows_x4" -> 64 * chunkRows,
         "rewritten_rows_x1" -> rows1, "rewritten_rows_x4" -> rows4,
         "rewritten_files_x1" -> files1, "rewritten_files_x4" -> files4,
         "mor_written_rows_x1" -> morRows1, "mor_written_rows_x4" -> morRows4))
     info(f"incc_fold 1x: ${m1.pretty} rewrittenRows=$rows1 files=$files1")
     info(f"incc_fold 4x: ${m4.pretty} rewrittenRows=$rows4 files=$files4")
-    assert(m4.diskSpill == 0L, s"fold spilled ${m4.diskSpill} bytes at 4x")
+    assert(m4.diskSpillBytes == 0L, s"fold spilled ${m4.diskSpillBytes} bytes at 4x")
     assert(rows4 <= 2L * math.max(rows1, 1L),
       s"fold rewrite follows TABLE size, not batch footprint: $rows1 -> $rows4 rows")
     assert(rows4 < 16 * chunkRows / 2,
@@ -823,7 +774,7 @@ class ScaleSoakSpec extends SparkSpec {
     // file count must stay bounded instead of growing one file per fold.
     import graft.streaming.IncrementalClusters
     val thr = 0.005
-    def loop(n: Long, tag: String): (RunMetrics, Double, Long, Int) = {
+    def loop(n: Long, tag: String): (Sample, Double, Long, Int) = {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-soak-am-$tag").toString
       graft.catalog.SnapshotTable.write(spark,
         spark.range(n).select(col("id").as("doc_id"), col("id").as("rep_id"))
@@ -847,9 +798,6 @@ class ScaleSoakSpec extends SparkSpec {
     }
     val (m1, r1, f1, n1) = loop(20000L, "x1")
     val (m4, r4, f4, n4) = loop(80000L, "x4")
-    def named(m: RunMetrics) = Map[String, Any]("sec" -> m.sec,
-      "shuffle_write_bytes" -> m.shuffleWriteBytes, "disk_spill_bytes" -> m.diskSpill,
-      "mem_spill_bytes" -> m.memSpill, "peak_task_mem_bytes" -> m.peakMem)
     SoakReport.record("incc_mor_automaintain", named(m1), named(m4), Map(
       "folds" -> 50L, "max_dv_ratio_ppm_x1" -> (r1 * 1e6).toLong,
       "max_dv_ratio_ppm_x4" -> (r4 * 1e6).toLong,
@@ -874,7 +822,7 @@ class ScaleSoakSpec extends SparkSpec {
     // POST-FOLD ratio on both from their manifest-read dvRatio alone.
     import graft.streaming.IncrementalClusters
     val thr = 0.005
-    def loop(n: Long, tag: String): (RunMetrics, Double, Double, Long, Long, Int) = {
+    def loop(n: Long, tag: String): (Sample, Double, Double, Long, Long, Int) = {
       val cdir = java.nio.file.Files.createTempDirectory(s"graft-soak-sam-$tag-c").toString
       val rdir = java.nio.file.Files.createTempDirectory(s"graft-soak-sam-$tag-r").toString
       // seed: n singleton clusters, each its own quality-scored rep
@@ -918,9 +866,6 @@ class ScaleSoakSpec extends SparkSpec {
     }
     val (m1, c1, r1, f1, _, n1) = loop(20000L, "x1")
     val (m4, c4, r4, f4, _, n4) = loop(80000L, "x4")
-    def named(m: RunMetrics) = Map[String, Any]("sec" -> m.sec,
-      "shuffle_write_bytes" -> m.shuffleWriteBytes, "disk_spill_bytes" -> m.diskSpill,
-      "mem_spill_bytes" -> m.memSpill, "peak_task_mem_bytes" -> m.peakMem)
     SoakReport.record("incc_scored_automaintain", named(m1), named(m4), Map(
       "folds" -> 50L,
       "max_assign_dv_ppm_x1" -> (c1 * 1e6).toLong, "max_reps_dv_ppm_x1" -> (r1 * 1e6).toLong,
@@ -973,9 +918,6 @@ class ScaleSoakSpec extends SparkSpec {
     val b4 = measure(() => noop(FuzzyJoin.levenshteinPairs(n4, "name", "id", maxDist = 2,
       extraBlockCol = Some("nation"))))
     n1.unpersist(); n4.unpersist()
-    def named(m: RunMetrics) = Map[String, Any]("sec" -> m.sec,
-      "shuffle_write_bytes" -> m.shuffleWriteBytes, "disk_spill_bytes" -> m.diskSpill,
-      "mem_spill_bytes" -> m.memSpill, "peak_task_mem_bytes" -> m.peakMem)
     SoakReport.record("fuzzy", named(m1), named(m4), Map(
       "rows_x1" -> rows1, "rows_x4" -> rows4,
       "max_block_occupancy_x1" -> occ1, "max_block_occupancy_x4" -> occ4,
@@ -984,8 +926,8 @@ class ScaleSoakSpec extends SparkSpec {
     info(s"fuzzy 1x (occ=$occ1): ${m1.pretty}")
     info(s"fuzzy 4x (occ=$occ4): ${m4.pretty}")
     info(s"fuzzy+nation 1x: ${b1.pretty}  4x: ${b4.pretty}")
-    assert(m4.diskSpill == 0L && b4.diskSpill == 0L,
-      s"fuzzy spilled at 4x: ${m4.diskSpill}/${b4.diskSpill}")
+    assert(m4.diskSpillBytes == 0L && b4.diskSpillBytes == 0L,
+      s"fuzzy spilled at 4x: ${m4.diskSpillBytes}/${b4.diskSpillBytes}")
     // length-only: candidates scale with occupancy² — allow that quadratic
     // (plus slack) but nothing beyond what the histogram predicts
     val occRatio = occ4.toDouble * occ4 / (occ1.toDouble * occ1)
@@ -1119,7 +1061,7 @@ class ScaleSoakSpec extends SparkSpec {
     val fresh = (0 until 2000)
       .map(i => ((10000000 + i).toLong, words((5000000 + i).toLong)))
       .toDF("doc_id", "text")
-    def metricsFor(refDocs: Int): RunMetrics = {
+    def metricsFor(refDocs: Int): Sample = {
       val reference = (0 until refDocs).map(i => (i.toLong, words(i.toLong)))
         .toDF("doc_id", "text")
       val prep = Dedup.crossPrepare(reference) // prepare forces its caches
@@ -1128,22 +1070,16 @@ class ScaleSoakSpec extends SparkSpec {
     }
     val m1 = metricsFor(20000)
     val m4 = metricsFor(80000)
-    SoakReport.record("cross_dedup",
-      Map("sec" -> m1.sec, "shuffle_write_bytes" -> m1.shuffleWriteBytes,
-        "disk_spill_bytes" -> m1.diskSpill, "mem_spill_bytes" -> m1.memSpill,
-        "peak_task_mem_bytes" -> m1.peakMem),
-      Map("sec" -> m4.sec, "shuffle_write_bytes" -> m4.shuffleWriteBytes,
-        "disk_spill_bytes" -> m4.diskSpill, "mem_spill_bytes" -> m4.memSpill,
-        "peak_task_mem_bytes" -> m4.peakMem),
+    SoakReport.record("cross_dedup", named(m1), named(m4),
       Map("reference_x1" -> 20000L, "reference_x4" -> 80000L, "fresh" -> 2000L))
     info(s"cross_dedup 1x: ${m1.pretty}")
     info(s"cross_dedup 4x: ${m4.pretty}")
-    assert(m4.diskSpill == 0L, s"cross sweep spilled ${m4.diskSpill} bytes at 4x reference")
+    assert(m4.diskSpillBytes == 0L, s"cross sweep spilled ${m4.diskSpillBytes} bytes at 4x reference")
     assert(m4.shuffleWriteBytes <= (1.5 * math.max(m1.shuffleWriteBytes, 1L << 20)).toLong,
       s"sweep shuffle follows the REFERENCE, not the batch: " +
         s"${m1.shuffleWriteBytes} -> ${m4.shuffleWriteBytes}")
-    assert(m4.sec <= 2.5 * math.max(m1.sec, 0.5),
-      f"sweep time follows the REFERENCE, not the batch: ${m1.sec}%.2fs -> ${m4.sec}%.2fs")
+    assert(m4.wallSec <= 2.5 * math.max(m1.wallSec, 0.5),
+      f"sweep time follows the REFERENCE, not the batch: ${m1.wallSec}%.2fs -> ${m4.wallSec}%.2fs")
   }
 
   test("soak: cross-SEMANTIC sweep cost stays flat as the prepared reference grows 4x") {
@@ -1166,7 +1102,7 @@ class ScaleSoakSpec extends SparkSpec {
       Seq.fill(k)(Seq.fill(dim)(r.nextDouble() * 2 - 1))
     }
     val fresh = vecs(2000, 10000000L)
-    def metricsFor(refVectors: Int, k: Int): RunMetrics = {
+    def metricsFor(refVectors: Int, k: Int): Sample = {
       val prep = graft.dedup.SemDeDup.crossSemanticPrepare(
         vecs(refVectors, 0L), centroidsOf(k)) // prepare forces its cache
       try measure(() => noop(
@@ -1175,24 +1111,18 @@ class ScaleSoakSpec extends SparkSpec {
     }
     val m1 = metricsFor(20000, 32)
     val m4 = metricsFor(80000, 128)
-    SoakReport.record("cross_semantic",
-      Map("sec" -> m1.sec, "shuffle_write_bytes" -> m1.shuffleWriteBytes,
-        "disk_spill_bytes" -> m1.diskSpill, "mem_spill_bytes" -> m1.memSpill,
-        "peak_task_mem_bytes" -> m1.peakMem),
-      Map("sec" -> m4.sec, "shuffle_write_bytes" -> m4.shuffleWriteBytes,
-        "disk_spill_bytes" -> m4.diskSpill, "mem_spill_bytes" -> m4.memSpill,
-        "peak_task_mem_bytes" -> m4.peakMem),
+    SoakReport.record("cross_semantic", named(m1), named(m4),
       Map("reference_x1" -> 20000L, "reference_x4" -> 80000L, "fresh" -> 2000L,
         "cells_x1" -> 32L, "cells_x4" -> 128L))
     info(s"cross_semantic 1x: ${m1.pretty}")
     info(s"cross_semantic 4x: ${m4.pretty}")
-    assert(m4.diskSpill == 0L,
-      s"cross-semantic sweep spilled ${m4.diskSpill} bytes at 4x reference")
+    assert(m4.diskSpillBytes == 0L,
+      s"cross-semantic sweep spilled ${m4.diskSpillBytes} bytes at 4x reference")
     assert(m4.shuffleWriteBytes <= (1.5 * math.max(m1.shuffleWriteBytes, 1L << 20)).toLong,
       s"sweep shuffle follows the REFERENCE, not the batch: " +
         s"${m1.shuffleWriteBytes} -> ${m4.shuffleWriteBytes}")
-    assert(m4.sec <= 2.5 * math.max(m1.sec, 0.5),
-      f"sweep time follows the REFERENCE, not the batch: ${m1.sec}%.2fs -> ${m4.sec}%.2fs")
+    assert(m4.wallSec <= 2.5 * math.max(m1.wallSec, 0.5),
+      f"sweep time follows the REFERENCE, not the batch: ${m1.wallSec}%.2fs -> ${m4.wallSec}%.2fs")
   }
 
   test("soak: prepared-reference maintenance bounds file counts independent of append history") {
@@ -1213,7 +1143,7 @@ class ScaleSoakSpec extends SparkSpec {
       (graft.catalog.SnapshotTable.currentManifest(spark, s"$dir/sets").get.entries.length +
         graft.catalog.SnapshotTable.currentManifest(spark, s"$dir/banded").get.entries.length)
         .toLong
-    def metricsFor(tag: String, appends: Int): (Long, Long, RunMetrics) = {
+    def metricsFor(tag: String, appends: Int): (Long, Long, Sample) = {
       val dir = s"$soakRoot/xmaint-$tag/ref"
       Dedup.crossPrepareTable(docs(2000, 0L), dir, buckets = 8)
       (0 until appends).foreach(a =>
@@ -1225,10 +1155,10 @@ class ScaleSoakSpec extends SparkSpec {
     val (b1, a1, m1) = metricsFor("x1", 4)
     val (b4, a4, m4) = metricsFor("x4", 16)
     SoakReport.record("cross_maintain",
-      Map("sec" -> m1.sec, "files_before" -> b1, "files_after" -> a1,
-        "disk_spill_bytes" -> m1.diskSpill),
-      Map("sec" -> m4.sec, "files_before" -> b4, "files_after" -> a4,
-        "disk_spill_bytes" -> m4.diskSpill),
+      Map("sec" -> m1.wallSec, "files_before" -> b1, "files_after" -> a1,
+        "disk_spill_bytes" -> m1.diskSpillBytes),
+      Map("sec" -> m4.wallSec, "files_before" -> b4, "files_after" -> a4,
+        "disk_spill_bytes" -> m4.diskSpillBytes),
       Map("appends_x1" -> 4L, "appends_x4" -> 16L, "buckets" -> 8L))
     info(s"cross_maintain 1x (4 appends): files $b1 -> $a1, ${m1.pretty}")
     info(s"cross_maintain 4x (16 appends): files $b4 -> $a4, ${m4.pretty}")
@@ -1237,7 +1167,7 @@ class ScaleSoakSpec extends SparkSpec {
     // the post-maintain count is partition-bounded, not history-bound
     assert(a4 <= (1.5 * a1).toLong + 2,
       s"post-maintain file count follows HISTORY, not partitions: $a1 vs $a4")
-    assert(m4.diskSpill == 0L, s"maintain spilled ${m4.diskSpill} bytes at 4x")
+    assert(m4.diskSpillBytes == 0L, s"maintain spilled ${m4.diskSpillBytes} bytes at 4x")
   }
 }
 
@@ -1253,7 +1183,7 @@ object SoakReport {
   def record(name: String, m1: Map[String, Any], m4: Map[String, Any],
       extra: Map[String, Long]): Unit = {
     // fields arrive NAMED from the call site — never positionally
-    // destructured off a case class, so a RunMetrics reordering cannot
+    // destructured off a case class, so a Sample reordering cannot
     // silently transpose artifact fields
     def renderMetrics(m: Map[String, Any]): String = {
       def num(v: Any): String = v match {

@@ -590,21 +590,15 @@ class SnapshotCatalogSpec extends SparkSpec {
         spark.conf.unset("spark.graft.vacuum.parallelListingThreshold")
         spark.sparkContext.clearJobGroup()
       }
-      // the status store is listener-fed (async): poll up to 5s
-      val deadline = System.currentTimeMillis() + 5000
-      var n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      while (n == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(50)
-        n = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      }
-      n
+      // the status store is listener-fed (async): deliver every queued event
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     }
     // dirs(4) > threshold(3) → the walk runs as a Spark job
     assert(jobsDuring("vacbound-above", 3) >= 1,
       "4 dirs over threshold 3 must list via a Spark job")
-    // dirs(4) <= threshold(4) → pure driver walk, zero jobs (the positive
-    // case above already bounded listener latency well under the poll window)
-    Thread.sleep(300)
+    // dirs(4) <= threshold(4) → pure driver walk, zero jobs
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
     val baseline = spark.sparkContext.statusTracker.getJobIdsForGroup("vacbound-at").length
     spark.sparkContext.setJobGroup("vacbound-at", "vacbound-at")
     spark.conf.set("spark.graft.vacuum.parallelListingThreshold", "4")
@@ -613,7 +607,7 @@ class SnapshotCatalogSpec extends SparkSpec {
       spark.conf.unset("spark.graft.vacuum.parallelListingThreshold")
       spark.sparkContext.clearJobGroup()
     }
-    Thread.sleep(300)
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getJobIdsForGroup("vacbound-at").length == baseline,
       "4 dirs at threshold 4 must walk on the driver (no Spark job)")
     assert(SnapshotTable.DefaultVacuumParallelThreshold == 64)

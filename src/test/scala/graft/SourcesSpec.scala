@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Sources
 import graft.catalog.CatalogOps
 import graft.gen.AdsDataGenerator
+import graft.transform.KpiTransform
 
 class SourcesSpec extends SparkSpec {
 
@@ -187,5 +188,25 @@ class SourcesSpec extends SparkSpec {
     val half = ads.filter(col("campaign_id") === 1)
     CatalogOps.truncateReload(half, "graft_test.staging_ads")
     assert(CatalogOps.rowCount(spark, "graft_test.staging_ads") == half.count())
+  }
+
+  test("materializeCurated: full-refresh CTAS + view; re-runs leave one copy; ÷0 KPIs are 0 (S10)") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-curated").toString + "/curated"
+    val staging = Seq(
+      (1L, 1000L, 10L, 5.0, 2L),
+      (2L, 0L, 0L, 0.0, 0L), // every denominator zero
+      (3L, 400L, 0L, 2.0, 0L)) // clicks and conversions zero
+      .toDF("campaign_id", "impressions", "clicks", "spend", "conversions")
+    KpiTransform.materializeCurated(staging, path, "graft_curated_view")
+    KpiTransform.materializeCurated(staging, path, "graft_curated_view") // full refresh
+    val view = spark.table("graft_curated_view")
+    assert(view.count() == staging.count(), "a re-run must overwrite, not append")
+    val kpis = view.select($"campaign_id", $"ctr", $"cpm", $"cpc", $"cpa")
+      .as[(Long, Double, Double, Double, Double)].collect().sortBy(_._1).toSeq
+    assert(kpis == Seq(
+      (1L, 0.01, 5.0, 0.5, 2.5),
+      (2L, 0.0, 0.0, 0.0, 0.0),
+      (3L, 0.0, 5.0, 0.0, 0.0)))
   }
 }
